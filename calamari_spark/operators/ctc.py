@@ -36,7 +36,9 @@ def _segment_maxes(probabilities: np.ndarray, sentence) -> np.ndarray:
     contract, also discarded). A trailing boundary equal to len(a) must be
     dropped (reduceat indices are exclusive of len): the final segment
     then runs [s_last, len) which IS the last char's range because
-    e_last == len there."""
+    e_last == len there. An empty sentence gives an empty (0, C) array."""
+    if not len(sentence):
+        return np.empty((0, probabilities.shape[1]), dtype=probabilities.dtype)
     bounds = np.empty(2 * len(sentence), dtype=np.int64)
     for i, (_, s, e) in enumerate(sentence):
         bounds[2 * i] = s

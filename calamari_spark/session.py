@@ -13,6 +13,7 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 ARROW_MAX_RECORDS = 1024  # images are heavy; keep Arrow batches modest
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -24,6 +25,11 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     cores: int N -> local[N]; "*" -> local[*]; None -> $SPARK_GRAFT_CPUS or *.
+
+    Workers get the package's parent directory on their PYTHONPATH (ahead
+    of any `spark.executorEnv.PYTHONPATH` in extra_conf), so they import
+    calamari_spark from any working directory, and they fork from
+    `calamari_spark._worker_daemon`, which saves ~0.2 s of CPU per task.
     """
     # one BLAS thread per task: executor slots are the parallelism unit;
     # nested BLAS threading oversubscribes cores and adds sync jitter to
@@ -39,6 +45,12 @@ def get_spark(
             shuffle_partitions = max(8, int(cores))
         except (TypeError, ValueError):
             shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS
+
+    extra_conf = dict(extra_conf or {})
+    worker_path = [PACKAGE_PARENT] + [
+        p for p in extra_conf.pop("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)
+        if p and p != PACKAGE_PARENT
+    ]
 
     builder = (
         SparkSession.builder.master(master)
@@ -62,8 +74,10 @@ def get_spark(
         # so this is purely "don't recompile what you already compiled" —
         # the same setting a long-lived production session wants.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(worker_path))
+        .config("spark.python.daemon.module", "calamari_spark._worker_daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

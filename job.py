@@ -93,7 +93,11 @@ def main(argv=None) -> None:
     from pyspark.sql import SparkSession
 
     # master/deploy settings come from spark-submit; only engine-level
-    # configs are set here (mirrors calamari_spark.session.get_spark)
+    # configs are set here (mirrors calamari_spark.session.get_spark).
+    # Unlike get_spark, this does not set spark.python.daemon.module to
+    # calamari_spark._worker_daemon: under --py-files the package reaches
+    # an executor's workers only after its Python daemon has started, so
+    # the daemon could not import it.
     builder = (
         SparkSession.builder.appName("calamari_spark_extract")
         .config("spark.sql.adaptive.enabled", "true")

@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 
 from calamari_spark.operators.ctc import (
+    _segment_maxes,
     find_alternatives,
     greedy_decode,
     greedy_labels,
@@ -72,6 +73,15 @@ def test_find_alternatives_reference_matrix():
     assert pred.avg_char_probability == pytest.approx((0.6 + 0.8) / 2)
     assert (p0.local_start, p0.local_end) == (1, 2)
     assert (p1.local_start, p1.local_end) == (3, 5)
+
+
+def test_segment_maxes_empty_sentence():
+    probs = _ref_matrix().astype(np.float32)
+    out = _segment_maxes(probs, [])
+    assert out.shape == (0, probs.shape[1]) and out.dtype == np.float32
+    np.testing.assert_array_equal(
+        _segment_maxes(probs, [(2, 1, 2), (1, 3, 5)]), [probs[1], probs[3:5].max(axis=0)]
+    )
 
 
 def test_greedy_repeat_collapse_blank_separation():
