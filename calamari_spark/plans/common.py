@@ -233,7 +233,7 @@ def sweep_materialize_scratch(
 def fan_out(df: DataFrame, *cols: str, per_core: int = 2) -> DataFrame:
     """Explicit hash repartition pinning a compute-bound map stage's
     parallelism to the cluster's cores (same rationale as the OCR stage,
-    extraction.recognize_media): a single-file parquet scan arrives as ONE
+    extraction.line_stage): a single-file parquet scan arrives as ONE
     partition and a map-only plan never re-spreads it, so an expensive
     per-row kernel (levenshtein, image decode) runs on one core; AQE's
     byte-based coalescing would likewise serialize small-but-expensive

@@ -33,14 +33,16 @@ Scale notes (the 100 TB plan):
 from __future__ import annotations
 
 import os
-from typing import Dict, Iterator, List, Tuple
+from typing import Callable, Dict, Iterator, List, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from calamari_spark.functions.text import regularize_column, regularize_str
+from calamari_spark.plans.common import fan_out
 from calamari_spark.plans.golden import golden_oracle as _golden
 
 # ---------------------------------------------------------------------------
@@ -162,18 +164,105 @@ RECOGNIZE_SCHEMA = (
 _WORKER_STATE: Dict[str, object] = {}  # per-Python-worker model cache
 
 
-def _get_recognizers(n_folds: int):
-    """Template-ensemble folds, loaded once per executor Python worker
-    (the reference loads checkpoints once per process; predictor.py:36-62)."""
-    key = f"template:{n_folds}"
+def _worker_cached(key: str, build: Callable[[], object]):
+    """``build()``'s result, built once per executor Python worker and
+    reused by every later task there (the reference loads checkpoints once
+    per process; predictor.py:36-62). ``key`` must name everything the
+    result depends on."""
     if key not in _WORKER_STATE:
+        _WORKER_STATE[key] = build()
+    return _WORKER_STATE[key]
+
+
+def _get_recognizers(n_folds: int):
+    """(codec, template-ensemble folds 0..n_folds-1), cached per worker."""
+
+    def build():
         from calamari_spark.codec import default_codec
         from calamari_spark.model.template import TemplateRecognizer
 
         codec = default_codec()
-        recs = [TemplateRecognizer(codec.charset, fold=k) for k in range(n_folds)]
-        _WORKER_STATE[key] = (codec, recs)
-    return _WORKER_STATE[key]
+        return codec, [TemplateRecognizer(codec.charset, fold=k) for k in range(n_folds)]
+
+    return _worker_cached(f"template:{n_folds}", build)
+
+
+def _decoded(rec, png: bytes):
+    """(img, pooled): the PNG decode and the fold-independent template
+    correlation, the expensive half of recognition that folds share."""
+    from calamari_spark.sources.pngio import decode_png
+
+    img = decode_png(bytes(png))
+    return img, rec.pooled_scores(img)
+
+
+def _fold_softmax(rec, img, pooled):
+    """One fold's blank-first softmax from the shared pooled scores (an
+    image too small to correlate has none and decodes to all-blank)."""
+    return rec.softmax_from_scores(pooled) if pooled is not None else rec._blank_softmax(img)
+
+
+def line_stage(lines: DataFrame, setup: Callable[[], Callable[[tuple], tuple]],
+               schema: str, on_error: str = "fail") -> DataFrame:
+    """The one per-line Python stage that every OCR query runs its kernel in.
+
+    Partitioning: ``fan_out(lines, "media_ref")``. The stage is
+    compute-bound, not byte-bound: about 1.9 ms of task time per line
+    without positions and 3.7 ms with them (perfbench's traced `extract`
+    run on a 4-core AVX-512 Xeon), plus about 20 ms of Python worker CPU
+    per task in a `get_spark` session. So AQE's byte-based coalescing is
+    the wrong heuristic here — at small inputs it would collapse the
+    exchange to one partition and serialize the OCR. An explicit hash
+    repartition on the unique media_ref pins the stage's parallelism to
+    the cluster's cores (user-specified repartitions are exempt from AQE
+    coalescing); at 100 TB the same repartition is what balances compute
+    across executors.
+
+    Per task, ``setup()`` runs once and returns ``kernel(row) -> tuple``,
+    where ``row`` is a namedtuple of the input columns. Output columns of
+    ``schema`` that the input also has pass through unchanged; the kernel
+    returns the rest, in schema order.
+
+    ``on_error``: a 10^12-doc corpus WILL contain corrupt blobs, and a
+    deterministic per-record raise fails the task on every retry — one bad
+    byte kills the job. "fail" (default) keeps that strict contract for
+    the driver-attested queries; "quarantine" catches per-record failures,
+    emits the row with NULL kernel outputs plus an ``error`` column
+    (schema gains ``error string``, at most 500 chars), and lets the
+    job-level metrics count failures per partition instead of dying."""
+    if on_error not in ("fail", "quarantine"):
+        raise ValueError(f"on_error must be 'fail' or 'quarantine', got {on_error!r}")
+    quarantine = on_error == "quarantine"
+    names = StructType.fromDDL(schema).fieldNames()
+    passed = [c for c in names if c in lines.columns]
+    computed = [c for c in names if c not in passed]
+    nulls = (None,) * len(computed)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        kernel = setup()
+        for b in batches:
+            results, errors = [], []
+            for row in b.itertuples(index=False):
+                if not quarantine:
+                    results.append(kernel(row))
+                    continue
+                try:
+                    results.append(kernel(row))
+                    errors.append(None)
+                except Exception as exc:  # noqa: BLE001 — quarantine by design
+                    results.append(nulls)
+                    errors.append(f"{type(exc).__name__}: {exc}"[:500])
+            kernel_cols = dict(zip(computed, zip(*results)))
+            out = {
+                c: b[c].to_numpy() if c in passed else list(kernel_cols.get(c, ()))
+                for c in names
+            }
+            if quarantine:
+                out["error"] = errors
+            yield pd.DataFrame(out)
+
+    out_schema = schema + (", error string" if quarantine else "")
+    return fan_out(lines, "media_ref").mapInPandas(run, schema=out_schema)
 
 
 # word segmentation from decoded glyph positions: the synthetic font has
@@ -189,26 +278,32 @@ def _spaces_between(prev_start: int, cur_start: int) -> int:
 
 
 def _recognize_one(png: bytes, n_folds: int,
-                   with_positions: bool = True,
-                   precomputed: tuple | None = None) -> Tuple[str, float, List[dict]]:
-    """Full per-line recognize path. Returns (sentence, avg_conf, positions).
+                   with_positions: bool = True) -> Tuple[str, float, List[dict]]:
+    """Full per-line recognize path: decode and correlate once, then
+    _recognize_pooled. Returns (sentence, avg_conf, positions)."""
+    _, recs = _get_recognizers(n_folds)
+    img, pooled = _decoded(recs[0], png)
+    return _recognize_pooled(img, pooled, n_folds, with_positions)
+
+
+def _recognize_pooled(img, pooled, n_folds: int,
+                      with_positions: bool = True) -> Tuple[str, float, List[dict]]:
+    """Recognition of a decoded line from its shared pooled scores:
+    per-fold softmax, CTC decode, vote, word segmentation and text
+    postprocessing. Returns (sentence, avg_conf, positions).
 
     with_positions=False is the text-only fast path used by document
     reassembly: the nested per-character position/alternative tree is not
     built, and when every fold decodes the identical label sequence the
     confidence merge is skipped (the voted sentence provably equals the
-    unanimous one; confidences are only approximated by fold 0's).
-    precomputed=(img, pooled) lets a caller that already decoded the PNG
-    and correlated templates (the fused greedy+beam stage) skip the
-    expensive fold-independent half."""
+    unanimous one; confidences are only approximated by fold 0's)."""
     from calamari_spark.model.template import STRIDE
-    from calamari_spark.operators.ctc import greedy_decode
+    from calamari_spark.operators.ctc import greedy_decode, greedy_labels
     from calamari_spark.operators.vote import (
         make_out_to_in,
         map_global_positions,
         vote_prediction,
     )
-    from calamari_spark.sources.pngio import decode_png
 
     codec, recs = _get_recognizers(n_folds)
 
@@ -218,24 +313,10 @@ def _recognize_one(png: bytes, n_folds: int,
     # preprocessing chain runs in the CNN path (x_extract_cnn), which
     # genuinely needs the dewarped fixed-height tensor and its inverse
     # transform meta (reference: default_image_processors.py:17-21).
-
-    # fold-independent correlation once; per-fold softmax is cheap
-    if precomputed is not None:
-        img, pooled = precomputed
-    else:
-        img = decode_png(bytes(png))
-        pooled = recs[0].pooled_scores(img)
     line_width = img.shape[1] if img.ndim == 2 else 0
     ident_meta = {"pad": 0, "m1": 1.0, "m2": 1.0, "line_width": line_width}
-
-    from calamari_spark.operators.ctc import greedy_labels
-
-    def _fold_sm(rec):
-        return (
-            rec.softmax_from_scores(pooled)
-            if pooled is not None
-            else rec._blank_softmax(img)
-        )
+    # template recognizer emits in raw-image coordinates / STRIDE
+    out_to_in = make_out_to_in(ident_meta, model_factor=float(STRIDE))
 
     # cheap unanimity probe first (r6): label equality == char equality
     # (code2char is injective), and on the unanimous fast path — the
@@ -260,9 +341,9 @@ def _recognize_one(png: bytes, n_folds: int,
     # tests/test_extraction.py::test_provable_unanimity_matches_full_probe.
     if with_positions:
         unanimous = False  # positions path always builds every fold's tree
-        sms = [_fold_sm(rec) for rec in recs]
+        sms = [_fold_softmax(rec, img, pooled) for rec in recs]
     else:
-        sms = [_fold_sm(recs[0])]
+        sms = [_fold_softmax(recs[0], img, pooled)]
         if pooled is None:
             unanimous = True  # every fold emits the identical blank matrix
         else:
@@ -276,7 +357,7 @@ def _recognize_one(png: bytes, n_folds: int,
                     np.all(np.argmax(sms[0][peaks], axis=1) != 0)
                 )
         if not unanimous:
-            sms += [_fold_sm(rec) for rec in recs[1:]]
+            sms += [_fold_softmax(rec, img, pooled) for rec in recs[1:]]
             fold_labels = [[c for c, _, _ in greedy_labels(sm)] for sm in sms]
             unanimous = all(l == fold_labels[0] for l in fold_labels[1:])
 
@@ -288,21 +369,17 @@ def _recognize_one(png: bytes, n_folds: int,
         from calamari_spark.operators.ctc import top1_prediction
 
         voted = top1_prediction(sms[0])
-        out_to_in = make_out_to_in(ident_meta, model_factor=float(STRIDE))
         map_global_positions(voted, out_to_in, sms[0].shape[0], codec.code2char)
     else:
+        # text-only folds reach here only after the exact label probe
+        # found them unequal
         folds, fold_chars = [], []
         for sm in sms:
             pred = greedy_decode(sm)
-            # template recognizer emits in raw-image coordinates / STRIDE
-            out_to_in = make_out_to_in(ident_meta, model_factor=float(STRIDE))
             map_global_positions(pred, out_to_in, sm.shape[0], codec.code2char)
             folds.append(pred)
             fold_chars.append([codec.code2char[l] for l in pred.labels])
-        if not with_positions and all(c == fold_chars[0] for c in fold_chars[1:]):
-            voted = folds[0]  # unanimous: voted text == any fold's text
-        else:
-            voted = vote_prediction(folds, fold_chars)
+        voted = vote_prediction(folds, fold_chars)
 
     # word segmentation + final text postproc (the post chain of §2.C)
     parts: List[str] = []
@@ -338,90 +415,23 @@ def _recognize_one(png: bytes, n_folds: int,
 def recognize_media(media_with_spans: DataFrame, n_folds: int = N_FOLDS,
                     with_positions: bool = True,
                     on_error: str = "fail") -> DataFrame:
-    """mapInPandas OCR stage over (doc_id, offset, media_ref, png).
+    """The line_stage OCR over (doc_id, offset, media_ref, png): one
+    RECOGNIZE_SCHEMA row per input row, plus ``error`` when ``on_error`` is
+    "quarantine" (see line_stage)."""
 
-    The stage is compute-bound, not byte-bound: about 1.9 ms of task time
-    per line without positions and 3.7 ms with them (perfbench's traced
-    `extract` run on a 4-core AVX-512 Xeon), plus about 20 ms of Python
-    worker CPU per task in a `get_spark` session. So AQE's byte-based
-    coalescing is the wrong heuristic here — at small inputs it
-    would collapse the exchange to one partition and serialize the OCR.
-    An explicit hash repartition on the unique media_ref pins the stage's
-    parallelism to the cluster's cores (user-specified repartitions are
-    exempt from AQE coalescing); at 100 TB the same repartition is what
-    balances compute across executors.
+    def kernel(row):
+        if row.png is None:
+            # a left-joined dangling media_ref: silently dropping the span
+            # would break the span-sequence contract, so strict mode fails
+            # the job loudly
+            raise ValueError(f"missing media blob {row.media_ref}")
+        # a NULL offset with a good blob is itself a corrupt record; it is
+        # checked after the blob so a missing blob reports the root cause
+        int(row.offset)
+        return _recognize_one(row.png, n_folds, with_positions)
 
-    ``on_error``: a 10^12-doc corpus WILL contain corrupt blobs, and a
-    deterministic per-record raise fails the task on every retry — one bad
-    byte kills the job. "fail" (default) keeps that strict contract for
-    the driver-attested queries; "quarantine" catches per-record failures,
-    emits the row with a NULL sentence plus an ``error`` column (schema
-    gains ``error string``), and lets the job-level metrics count failures
-    per partition instead of dying."""
-    if on_error not in ("fail", "quarantine"):
-        raise ValueError(f"on_error must be 'fail' or 'quarantine', got {on_error!r}")
-    spark = media_with_spans.sparkSession
-    n_part = spark.sparkContext.defaultParallelism * 2
-    media_with_spans = media_with_spans.repartition(n_part, "media_ref")
-
-    quarantine = on_error == "quarantine"
-    cols = [
-        "doc_id", "offset", "media_ref", "sentence",
-        "avg_char_probability", "n_folds", "positions",
-    ] + (["error"] if quarantine else [])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for doc_id, offset, ref, png in zip(
-                b["doc_id"], b["offset"], b["media_ref"], b["png"]
-            ):
-                row = {
-                    "doc_id": doc_id,
-                    "offset": None,
-                    "media_ref": ref,
-                    "sentence": None,
-                    "avg_char_probability": None,
-                    "n_folds": n_folds,
-                    "positions": None,
-                }
-                if quarantine:
-                    row["error"] = None
-                    try:
-                        # keep a convertible offset even when the blob is
-                        # missing, but let the missing-blob error dominate a
-                        # NULL/NaN offset (report the root cause, not the
-                        # NaN-conversion it would mask); a bad offset with a
-                        # good blob is itself a corrupt record to quarantine
-                        off_exc = None
-                        try:
-                            row["offset"] = int(offset)
-                        except Exception as oe:  # noqa: BLE001
-                            off_exc = oe
-                        if png is None:
-                            raise ValueError(f"missing media blob {ref}")
-                        if off_exc is not None:
-                            raise off_exc
-                        row["sentence"], row["avg_char_probability"], row["positions"] = (
-                            _recognize_one(png, n_folds, with_positions)
-                        )
-                    except Exception as exc:  # noqa: BLE001 — quarantine by design
-                        row["error"] = f"{type(exc).__name__}: {exc}"[:500]
-                else:
-                    row["offset"] = int(offset)
-                    if png is None:
-                        # a left-joined dangling media_ref: silently dropping
-                        # the span would break the span-sequence contract, so
-                        # strict mode fails the job loudly
-                        raise ValueError(f"missing media blob {ref}")
-                    row["sentence"], row["avg_char_probability"], row["positions"] = (
-                        _recognize_one(png, n_folds, with_positions)
-                    )
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    schema = RECOGNIZE_SCHEMA + (", error string" if quarantine else "")
-    return media_with_spans.mapInPandas(run, schema=schema)
+    lines = media_with_spans.withColumn("n_folds", F.lit(n_folds))
+    return line_stage(lines, lambda: kernel, RECOGNIZE_SCHEMA, on_error)
 
 
 # ---------------------------------------------------------------------------
@@ -538,7 +548,7 @@ def extract_documents(
     salted ordered reassembly. Output schema == input schema with every
     span's text filled (media spans carry their recognized sentence).
 
-    on_error="quarantine" (see recognize_media) keeps a document whose
+    on_error="quarantine" (see line_stage) keeps a document whose
     media blob fails to decode/recognize: the failed span stays in the
     sequence with text NULL, and the job-level metrics count it."""
     spans = explode_spans(docs)
@@ -728,14 +738,22 @@ FROM resolved GROUP BY doc_id ORDER BY doc_id
 """
 
 
+def _media_lines(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """The corpus's media spans inner-joined to the media store, as
+    (media_ref, *cols); ``cols`` name span columns (doc_id, offset) or
+    media-store columns (png, gt, width)."""
+    docs, media = load_interleaved(spark, sf_dir)
+    spans = explode_spans(docs).filter(F.col("kind") == "media")
+    return spans.join(media, "media_ref").select("media_ref", *cols)
+
+
 def _fold0_beam_sentence(codec, rec, img, pooled, beam_width: int = 5) -> str:
     """Prefix-beam decode of one line's fold-0 softmax — the single
     definition shared by the fused driver row (x_media_text) and its shadow
     twin (x_media_text_beam), so the two cannot drift."""
     from calamari_spark.operators.ctc import prefix_beam_decode
 
-    sm = rec.softmax_from_scores(pooled) if pooled is not None else rec._blank_softmax(img)
-    labels = prefix_beam_decode(sm, blank=0, beam_width=beam_width)
+    labels = prefix_beam_decode(_fold_softmax(rec, img, pooled), blank=0, beam_width=beam_width)
     return "".join(codec.code2char[l] for l in labels)
 
 
@@ -747,36 +765,19 @@ def x_media_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     standalone beam query remains in SHADOW_QUERIES). Oracle: the ground
     truth for the voted sentence, the space-less ground truth for the beam
     (the beam carries no per-frame positions, so no word segmentation)."""
-    docs, media = load_interleaved(spark, sf_dir)
-    spans = explode_spans(docs).filter(F.col("kind") == "media").select(
-        "doc_id", "offset", "media_ref"
-    )
-    with_png = spans.join(media.select("media_ref", "png"), "media_ref")
-    n_part = spark.sparkContext.defaultParallelism * 2
-    with_png = with_png.repartition(n_part, "media_ref")
+
+    def setup():
+        codec, recs = _get_recognizers(N_FOLDS)
+
+        def kernel(row):
+            img, pooled = _decoded(recs[0], row.png)
+            sentence, _, _ = _recognize_pooled(img, pooled, N_FOLDS, with_positions=False)
+            return sentence, _fold0_beam_sentence(codec, recs[0], img, pooled)
+
+        return kernel
 
     schema = "media_ref string, sentence string, sentence_beam string"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from calamari_spark.sources.pngio import decode_png
-
-        codec, recs = _get_recognizers(N_FOLDS)
-        for b in batches:
-            rows = []
-            for ref, png in zip(b["media_ref"], b["png"]):
-                img = decode_png(bytes(png))
-                pooled = recs[0].pooled_scores(img)
-                sentence, _, _ = _recognize_one(
-                    png, N_FOLDS, with_positions=False, precomputed=(img, pooled)
-                )
-                rows.append({
-                    "media_ref": ref,
-                    "sentence": sentence,
-                    "sentence_beam": _fold0_beam_sentence(codec, recs[0], img, pooled),
-                })
-            yield pd.DataFrame(rows, columns=["media_ref", "sentence", "sentence_beam"])
-
-    return with_png.mapInPandas(run, schema=schema).orderBy("media_ref")
+    return line_stage(_media_lines(spark, sf_dir, "png"), setup, schema).orderBy("media_ref")
 
 
 def x_media_text_oracle(sf_dir: str) -> str:
@@ -805,11 +806,7 @@ def x_span_equality_oracle(sf_dir: str) -> str:
 def _recognized_with_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Internal: full nested prediction tree (positions + alternatives) —
     the extended-prediction sink shape (reference: scripts/predict.py:151-175)."""
-    docs, media = load_interleaved(spark, sf_dir)
-    spans = explode_spans(docs).filter(F.col("kind") == "media").select(
-        "doc_id", "offset", "media_ref"
-    )
-    return recognize_media(spans.join(media.select("media_ref", "png"), "media_ref"))
+    return recognize_media(_media_lines(spark, sf_dir, "doc_id", "offset", "png"))
 
 
 def x_recognize_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -858,33 +855,13 @@ def x_media_text_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     ctcwordbeamsearchdecoder.py:9-26). The beam carries no per-frame
     positions, so the sentence is the raw label decode (space-less); the
     oracle is the ground truth with spaces removed."""
-    docs, media = load_interleaved(spark, sf_dir)
-    spans = explode_spans(docs).filter(F.col("kind") == "media").select("media_ref")
-    with_png = spans.join(media.select("media_ref", "png"), "media_ref")
-    n_part = spark.sparkContext.defaultParallelism * 2
-    with_png = with_png.repartition(n_part, "media_ref")
+
+    def setup():
+        codec, (rec,) = _get_recognizers(1)
+        return lambda row: (_fold0_beam_sentence(codec, rec, *_decoded(rec, row.png)),)
 
     schema = "media_ref string, sentence string"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from calamari_spark.sources.pngio import decode_png
-
-        codec, recs = _get_recognizers(1)
-        rec = recs[0]
-        for b in batches:
-            rows = []
-            for ref, png in zip(b["media_ref"], b["png"]):
-                img = decode_png(bytes(png))
-                pooled = rec.pooled_scores(img)
-                rows.append(
-                    {
-                        "media_ref": ref,
-                        "sentence": _fold0_beam_sentence(codec, rec, img, pooled),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_ref", "sentence"])
-
-    return with_png.mapInPandas(run, schema=schema).orderBy("media_ref")
+    return line_stage(_media_lines(spark, sf_dir, "png"), setup, schema).orderBy("media_ref")
 
 
 def x_media_text_beam_oracle(sf_dir: str) -> str:
@@ -893,6 +870,13 @@ def x_media_text_beam_oracle(sf_dir: str) -> str:
         f"SELECT media_ref, replace(gt, ' ', '') AS sentence"
         f" FROM read_parquet('{media}') ORDER BY media_ref"
     )
+
+
+def _lm_charset(codec) -> Tuple[str, str]:
+    """(charset, word_chars) of the word-beam decoders: labels 1..N with
+    the blank excluded, and the same without the space."""
+    charset = "".join(codec.charset[1:])
+    return charset, "".join(c for c in charset if c != " ")
 
 
 def x_media_text_wbs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -905,53 +889,37 @@ def x_media_text_wbs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture-equal) — so this query attests the dictionary-constrained
     decode on real optics while x_media_text_wordlm attests LM rescoring.
     Oracle: the space-less ground truth, exactly."""
-    docs, media = load_interleaved(spark, sf_dir)
-    lines = media.select("media_ref", "png")
+    _, media = load_interleaved(spark, sf_dir)
 
     # dictionary = the corpus vocab.json MODEL CONSTANT (written once by
     # the corpus materialization, sources/synth.py write_vocab) — no
     # query-time corpus-wide collect
-    vocab = sorted(load_vocab(sf_dir))
-    lm_corpus = " ".join(vocab)
+    lm_corpus = " ".join(sorted(load_vocab(sf_dir)))
 
-    schema = "media_ref string, sentence string"
-    n_part = spark.sparkContext.defaultParallelism * 2
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def setup():
         import hashlib as _hl
 
         from calamari_spark.operators.ctc import WordLM, word_beam_decode
         from calamari_spark.sources.pngio import decode_png
 
-        codec, recs = _get_recognizers(1)
-        rec = recs[0]
-        charset = "".join(codec.charset[1:])  # labels 1..N; blank excluded
-        word_chars = "".join(c for c in charset if c != " ")
+        codec, (rec,) = _get_recognizers(1)
+        charset, word_chars = _lm_charset(codec)
         key = "wbslm:" + _hl.sha256(f"{charset}|{lm_corpus}".encode()).hexdigest()
-        if key not in _WORKER_STATE:
-            _WORKER_STATE[key] = WordLM(lm_corpus, charset, word_chars)
-        lm = _WORKER_STATE[key]
-        for b in batches:
-            rows = []
-            for ref, png in zip(b["media_ref"], b["png"]):
-                img = decode_png(bytes(png))
-                pooled = rec.pooled_scores(img)
-                sm = (rec.softmax_from_scores(pooled) if pooled is not None
-                      else rec._blank_softmax(img))
-                # roll blank-first -> blank-last (this decoder's convention)
-                mat = np.concatenate([sm[:, 1:], sm[:, :1]], axis=1)
-                out = word_beam_decode(
-                    mat, charset, lm, beam_width=10,
-                    use_ngrams=False, allow_word_to_word=True,
-                )
-                rows.append({"media_ref": ref, "sentence": out})
-            yield pd.DataFrame(rows, columns=["media_ref", "sentence"])
+        lm = _worker_cached(key, lambda: WordLM(lm_corpus, charset, word_chars))
 
-    return (
-        lines.repartition(n_part, "media_ref")
-        .mapInPandas(run, schema=schema)
-        .orderBy("media_ref")
-    )
+        def kernel(row):
+            sm = rec.forward_single(decode_png(bytes(row.png)))
+            # roll blank-first -> blank-last (this decoder's convention)
+            mat = np.concatenate([sm[:, 1:], sm[:, :1]], axis=1)
+            return (word_beam_decode(
+                mat, charset, lm, beam_width=10,
+                use_ngrams=False, allow_word_to_word=True,
+            ),)
+
+        return kernel
+
+    schema = "media_ref string, sentence string"
+    return line_stage(media.select("media_ref", "png"), setup, schema).orderBy("media_ref")
 
 
 def x_media_text_wbs_oracle(sf_dir: str) -> str:
@@ -990,33 +958,23 @@ def x_media_text_tokenpass(
     IS the attestation. Oracle: the full ground truth. ``dictionary_topk``
     selects the at-scale bounded-dictionary mode (tokenpass_dictionary);
     the default decodes the full vocabulary, fixture-exact."""
-    docs, media = load_interleaved(spark, sf_dir)
-    lines = media.select("media_ref", "png")
+    _, media = load_interleaved(spark, sf_dir)
     vocab = tokenpass_dictionary(load_vocab(sf_dir), dictionary_topk)
 
-    schema = "media_ref string, sentence string"
-    n_part = spark.sparkContext.defaultParallelism * 2
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def setup():
         from calamari_spark.operators.ctc import token_passing_decode
         from calamari_spark.sources.pngio import decode_png
 
-        codec, recs = _get_recognizers(1)
-        rec = recs[0]
-        for b in batches:
-            rows = []
-            for ref, png in zip(b["media_ref"], b["png"]):
-                img = decode_png(bytes(png))
-                sm = rec.forward_single(img)  # blank-first [T, classes]
-                out = token_passing_decode(sm, codec.charset, vocab, blank=0)
-                rows.append({"media_ref": ref, "sentence": out})
-            yield pd.DataFrame(rows, columns=["media_ref", "sentence"])
+        codec, (rec,) = _get_recognizers(1)
 
-    return (
-        lines.repartition(n_part, "media_ref")
-        .mapInPandas(run, schema=schema)
-        .orderBy("media_ref")
-    )
+        def kernel(row):
+            sm = rec.forward_single(decode_png(bytes(row.png)))  # blank-first [T, classes]
+            return (token_passing_decode(sm, codec.charset, vocab, blank=0),)
+
+        return kernel
+
+    schema = "media_ref string, sentence string"
+    return line_stage(media.select("media_ref", "png"), setup, schema).orderBy("media_ref")
 
 
 def x_media_text_tokenpass_oracle(sf_dir: str) -> str:
@@ -1038,8 +996,7 @@ def _wordlm_prefix_query(
     WordLM.from_counts from the vocab.json + vocab_bigrams.json MODEL
     CONSTANTS (trained offline by the corpus materialization, shipped like
     the IVF centroids — no corpus string, no query-time collect)."""
-    docs, media = load_interleaved(spark, sf_dir)
-    lines = media.select("media_ref", "png")
+    _, media = load_interleaved(spark, sf_dir)
 
     # (word -> count) model constants, fed straight to the count-aware LM
     # constructor: no repeated-word corpus string is ever materialized (at a
@@ -1048,19 +1005,15 @@ def _wordlm_prefix_query(
     vocab_counts = dict(sorted(load_vocab(sf_dir).items()))
     bigram_counts = load_vocab_bigrams(sf_dir)
 
-    schema = f"media_ref string, {out_col} string"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def setup():
         import hashlib as _hl
         import json as _json
 
         from calamari_spark.operators.ctc import WordLM, word_beam_decode
         from calamari_spark.sources.pngio import decode_png
 
-        codec, recs = _get_recognizers(1)
-        rec = recs[0]
-        charset = "".join(codec.charset[1:])  # labels 1..N; blank excluded
-        word_chars = "".join(c for c in charset if c != " ")
+        codec, (rec,) = _get_recognizers(1)
+        charset, word_chars = _lm_charset(codec)
         # key on the count-table CONTENT: same-size vocabularies from
         # different corpora must not reuse a stale cached LM
         digest = _hl.sha256(
@@ -1069,54 +1022,46 @@ def _wordlm_prefix_query(
                 f"|{sorted(bigram_counts.items())!r}"
             ).encode()
         ).hexdigest()
-        key = "wordlm:" + digest
-        if key not in _WORKER_STATE:
-            _WORKER_STATE[key] = WordLM.from_counts(
-                vocab_counts, charset, word_chars, bigram_counts=bigram_counts
-            )
-        lm = _WORKER_STATE[key]
-        for b in batches:
-            rows = []
-            for ref, png in zip(b["media_ref"], b["png"]):
-                img = decode_png(bytes(png))
-                sm = rec.forward_single(img)  # blank-first [T, classes]
-                peaks = np.flatnonzero(sm.argmax(axis=1) != 0)
-                # word-slice boundaries at the inter-word gaps; spaces are
-                # BLANK RUNS in the optics (no space label), so each word
-                # decodes from its own slice with the word history threaded
-                # through initial_words — word k >= 2 is then scored by
-                # bigram(word_{k-1}, .) exactly as a full-line beam would
-                bounds = [0]
-                for a, c in zip(peaks, peaks[1:]):
-                    if c - a >= 4:  # inter-word gap
-                        bounds.append(int(a) + 2)
-                        if len(bounds) == n_words + 1:
-                            break
-                while len(bounds) < n_words + 1:
-                    bounds.append(sm.shape[0])
-                words_out = []
-                for k in range(n_words):
-                    lo, hi = bounds[k], bounds[k + 1]
-                    if hi <= lo:
-                        break
-                    # roll blank-first -> blank-last (decoder convention)
-                    mat = np.concatenate([sm[lo:hi, 1:], sm[lo:hi, :1]], axis=1)
-                    w = word_beam_decode(
-                        mat, charset, lm, beam_width=10, use_ngrams=True,
-                        initial_words=tuple(words_out),
-                    )
-                    if w == "":
-                        break
-                    words_out.append(w)
-                rows.append({"media_ref": ref, out_col: " ".join(words_out)})
-            yield pd.DataFrame(rows, columns=["media_ref", out_col])
+        lm = _worker_cached("wordlm:" + digest, lambda: WordLM.from_counts(
+            vocab_counts, charset, word_chars, bigram_counts=bigram_counts
+        ))
 
-    n_part = spark.sparkContext.defaultParallelism * 2
-    return (
-        lines.repartition(n_part, "media_ref")
-        .mapInPandas(run, schema=schema)
-        .orderBy("media_ref")
-    )
+        def kernel(row):
+            sm = rec.forward_single(decode_png(bytes(row.png)))  # blank-first [T, classes]
+            peaks = np.flatnonzero(sm.argmax(axis=1) != 0)
+            # word-slice boundaries at the inter-word gaps; spaces are
+            # BLANK RUNS in the optics (no space label), so each word
+            # decodes from its own slice with the word history threaded
+            # through initial_words — word k >= 2 is then scored by
+            # bigram(word_{k-1}, .) exactly as a full-line beam would
+            bounds = [0]
+            for a, c in zip(peaks, peaks[1:]):
+                if c - a >= 4:  # inter-word gap
+                    bounds.append(int(a) + 2)
+                    if len(bounds) == n_words + 1:
+                        break
+            while len(bounds) < n_words + 1:
+                bounds.append(sm.shape[0])
+            words_out = []
+            for k in range(n_words):
+                lo, hi = bounds[k], bounds[k + 1]
+                if hi <= lo:
+                    break
+                # roll blank-first -> blank-last (decoder convention)
+                mat = np.concatenate([sm[lo:hi, 1:], sm[lo:hi, :1]], axis=1)
+                w = word_beam_decode(
+                    mat, charset, lm, beam_width=10, use_ngrams=True,
+                    initial_words=tuple(words_out),
+                )
+                if w == "":
+                    break
+                words_out.append(w)
+            return (" ".join(words_out),)
+
+        return kernel
+
+    schema = f"media_ref string, {out_col} string"
+    return line_stage(media.select("media_ref", "png"), setup, schema).orderBy("media_ref")
 
 
 def x_media_text_wordlm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1164,9 +1109,6 @@ def x_extract_cnn(spark: SparkSession, sf_dir: str) -> DataFrame:
     run per padded-length group so the BiLSTM's backward pass sees padding
     determined by the line's OWN length, never by batch composition —
     which makes the value-hash stable under any partitioning."""
-    docs, media = load_interleaved(spark, sf_dir)
-    spans = explode_spans(docs).filter(F.col("kind") == "media").select("media_ref")
-    with_png = spans.join(media.select("media_ref", "png", "width"), "media_ref")
     # width bucketing: sort by width within partitions so each Arrow batch
     # holds few distinct padded lengths — the reference's bucket_boundaries
     # length bucketing (data.py:88-92, test_prediction.py:209-213). The
@@ -1174,15 +1116,16 @@ def x_extract_cnn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch-composition independence), so the sort's win is GROUP SIZE: few
     # big GEMMs instead of many one-line ones (measured A/B: BASELINE.md
     # width-bucketing section, scripts/bucket_evidence.py)
-    n_part = spark.sparkContext.defaultParallelism * 2
-    with_png = with_png.repartition(n_part, "media_ref").sortWithinPartitions("width")
-    return _extract_cnn_over(with_png).orderBy("media_ref")
+    with_png = fan_out(_media_lines(spark, sf_dir, "png", "width"), "media_ref")
+    return _extract_cnn_over(with_png.sortWithinPartitions("width")).orderBy("media_ref")
 
 
 def _extract_cnn_over(with_png: DataFrame) -> DataFrame:
     """The CNN ensemble kernel over a prepared (media_ref, png, width)
     frame — split out so the bucketing A/B (scripts/bucket_evidence.py) can
-    run the identical kernel minus the width sort."""
+    run the identical kernel minus the width sort. It stays outside
+    line_stage because it forwards per padded-length group of a batch,
+    not per line."""
     schema = "media_ref string, sentence string, out_len int, n_frames int"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1192,15 +1135,14 @@ def _extract_cnn_over(with_png: DataFrame) -> DataFrame:
         from calamari_spark.operators.imaging import preprocess_line
         from calamari_spark.sources.pngio import decode_png
 
-        key = "cnn:2"
-        if key not in _WORKER_STATE:
+        def build():
             codec = default_codec()
-            nets = [
+            return codec, [
                 RecognitionNet.pinned(len(codec), fold=k, conv1=8, conv2=12, lstm=16)
                 for k in range(2)
             ]
-            _WORKER_STATE[key] = (codec, nets)
-        codec, nets = _WORKER_STATE[key]
+
+        codec, nets = _worker_cached("cnn:2", build)
 
         for b in batches:
             lines, refs = [], []
@@ -1249,40 +1191,34 @@ def x_fold_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     every fold's own sentence AND the voted sentence are scored against the
     ground truth; one row per fold plus 'voted'. Fold sentences come out of
     the same UDF pass that votes (EnsembleGraph's per-fold outputs,
-    ensemblegraph.py:24-45). Voter internals are not SQL: rows-only."""
-    docs, media = load_interleaved(spark, sf_dir)
-    spans = explode_spans(docs).filter(F.col("kind") == "media").select("media_ref")
-    with_png = spans.join(media.select("media_ref", "png", "gt"), "media_ref")
-    n_part = spark.sparkContext.defaultParallelism * 2
-    with_png = with_png.repartition(n_part, "media_ref")
+    ensemblegraph.py:24-45), from the one decode and correlation per line.
+    Voter internals are not SQL: rows-only."""
 
-    schema = "media_ref string, fold string, sentence string, gt string"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def setup():
         from calamari_spark.operators.ctc import greedy_decode
-        from calamari_spark.sources.pngio import decode_png
 
         codec, recs = _get_recognizers(N_FOLDS)
-        for b in batches:
-            rows = []
-            for ref, png, gt in zip(b["media_ref"], b["png"], b["gt"]):
-                sentence, _, _ = _recognize_one(png, N_FOLDS, with_positions=False)
-                rows.append({"media_ref": ref, "fold": "voted",
-                             "sentence": sentence, "gt": gt})
-                img = decode_png(bytes(png))
-                pooled = recs[0].pooled_scores(img)
-                for k, rec in enumerate(recs):
-                    sm = (rec.softmax_from_scores(pooled) if pooled is not None
-                          else rec._blank_softmax(img))
-                    pred = greedy_decode(sm)
-                    txt = "".join(codec.code2char[l] for l in pred.labels)
-                    rows.append({"media_ref": ref, "fold": f"fold_{k}",
-                                 "sentence": txt, "gt": gt.replace(" ", "")})
-            yield pd.DataFrame(rows, columns=["media_ref", "fold", "sentence", "gt"])
 
-    per_line = with_png.mapInPandas(run, schema=schema)
+        def kernel(row):
+            img, pooled = _decoded(recs[0], row.png)
+            sentence, _, _ = _recognize_pooled(img, pooled, N_FOLDS, with_positions=False)
+            folds = [{"fold": "voted", "sentence": sentence, "gt": row.gt}]
+            for k, rec in enumerate(recs):
+                pred = greedy_decode(_fold_softmax(rec, img, pooled))
+                folds.append({
+                    "fold": f"fold_{k}",
+                    "sentence": "".join(codec.code2char[l] for l in pred.labels),
+                    "gt": row.gt.replace(" ", ""),
+                })
+            return (folds,)
+
+        return kernel
+
+    schema = "folds array<struct<fold:string, sentence:string, gt:string>>"
+    per_line = line_stage(_media_lines(spark, sf_dir, "png", "gt"), setup, schema)
     return (
-        per_line.groupBy("fold")
+        per_line.select(F.inline("folds"))
+        .groupBy("fold")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
             F.sum(F.length("gt")).alias("total_chars"),
@@ -1316,13 +1252,9 @@ def x_extract_cer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CER of the recognize path vs media ground truth — the reference's
     quality gate (test_eval.py:56: avg_ler < 0.0009). With the template
     ensemble this must be exactly 0."""
-    docs, media = load_interleaved(spark, sf_dir)
-    spans = explode_spans(docs).filter(F.col("kind") == "media").select(
-        "doc_id", "offset", "media_ref"
-    )
+    _, media = load_interleaved(spark, sf_dir)
     rec = recognize_media(
-        spans.join(media.select("media_ref", "png"), "media_ref"),
-        with_positions=False,
+        _media_lines(spark, sf_dir, "doc_id", "offset", "png"), with_positions=False
     ).select("media_ref", "sentence")
     joined = rec.join(media.select("media_ref", "gt"), "media_ref")
     per_line = joined.select(

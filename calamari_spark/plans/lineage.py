@@ -71,7 +71,7 @@ def run_extraction_job(
     """Resumable extraction: processes pending doc_id buckets in waves,
     committing output + lineage + metrics after each wave. Returns a
     summary dict. ``fail_after_waves`` simulates a mid-run kill (tests).
-    ``on_error="quarantine"`` (see recognize_media) survives corrupt media
+    ``on_error="quarantine"`` (see extraction.line_stage) survives corrupt media
     blobs: the failed span lands with text NULL and the metrics table
     counts it per bucket (``n_failed``).
 

@@ -24,56 +24,35 @@ def x_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged here — decode once, emit original dims and scale_to_h(32) dims;
     the standalone resize query, which also attests the PNG re-encode, stays
     in SHADOW_QUERIES; encode_png round-trips are also attested by
-    x_pagexml_cutout). Oracle: stored dims + the round-half-even geometry."""
-    from typing import Iterator as _Iter
-
-    import pandas as _pd
-
-    from calamari_spark.plans.common import fan_out
-    from calamari_spark.plans.extraction import load_interleaved
+    x_pagexml_cutout). Oracle: stored dims + the round-half-even geometry.
+    line_stage fans the media store out: it is a single parquet file at
+    bench SFs, so the decode kernel would otherwise run on ONE core (the
+    scan's one partition); PNG payloads are sub-KB line crops, so the
+    spread is cheap."""
+    from calamari_spark.plans.extraction import line_stage, load_interleaved
 
     _, media = load_interleaved(spark, sf_dir)
 
-    schema = "media_ref string, width int, height int, resized_width int, resized_height int"
-
-    def run(batches: _Iter[_pd.DataFrame]) -> _Iter[_pd.DataFrame]:
+    def setup():
         from calamari_spark.operators.imaging import scale_to_h_dims
         from calamari_spark.sources.pngio import decode_png
 
-        for b in batches:
-            rows = []
-            for ref, png in zip(b["media_ref"], b["png"]):
-                img = decode_png(bytes(png))
-                # geometry only: the resize output of this query is the
-                # (height, width) pair, so resampling the pixels just to
-                # read .shape was ~4 ms/line of discarded work (guide §1.2:
-                # don't compute things you throw away); scale_to_h_dims IS
-                # scale_to_h's own geometry, factored out so the two cannot
-                # drift. The real resample stays attested by x_image_resize
-                # (shadow) and x_pagexml_cutout.
-                rh, rw = scale_to_h_dims(int(img.shape[0]), int(img.shape[1]), 32)
-                rows.append(
-                    {
-                        "media_ref": ref,
-                        "width": int(img.shape[1]),
-                        "height": int(img.shape[0]),
-                        "resized_width": rw,
-                        "resized_height": rh,
-                    }
-                )
-            yield _pd.DataFrame(
-                rows,
-                columns=["media_ref", "width", "height", "resized_width", "resized_height"],
-            )
+        def kernel(row):
+            h, w = decode_png(bytes(row.png)).shape[:2]
+            # geometry only: the resize output of this query is the
+            # (height, width) pair, so resampling the pixels just to
+            # read .shape was ~4 ms/line of discarded work (guide §1.2:
+            # don't compute things you throw away); scale_to_h_dims IS
+            # scale_to_h's own geometry, factored out so the two cannot
+            # drift. The real resample stays attested by x_image_resize
+            # (shadow) and x_pagexml_cutout.
+            rh, rw = scale_to_h_dims(int(h), int(w), 32)
+            return int(w), int(h), rw, rh
 
-    # fan_out: the media store is a single parquet file at bench SFs, so the
-    # decode kernel otherwise runs on ONE core (the scan's one partition);
-    # PNG payloads are sub-KB line crops, so the spread is cheap
-    return (
-        fan_out(media.select("media_ref", "png"), "media_ref")
-        .mapInPandas(run, schema=schema)
-        .orderBy("media_ref")
-    )
+        return kernel
+
+    schema = "media_ref string, width int, height int, resized_width int, resized_height int"
+    return line_stage(media.select("media_ref", "png"), setup, schema).orderBy("media_ref")
 
 
 def x_image_stats_oracle(sf_dir: str) -> str:
@@ -177,43 +156,30 @@ def x_ctc_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval metric (tf.nn.ctc_loss analog; forward algorithm in numpy).
     Model-internal values, but per-line deterministic (no cross-row float
     sums): oracled against the committed golden fixture (plans/golden.py)."""
-    from typing import Iterator as _Iter
-
-    import pandas as _pd
-
-    from calamari_spark.plans.extraction import _get_recognizers, load_interleaved
+    from calamari_spark.plans.extraction import (
+        _get_recognizers,
+        line_stage,
+        load_interleaved,
+    )
 
     _, media = load_interleaved(spark, sf_dir)
-    lines = media.select("media_ref", "png", "gt")
-    n_part = spark.sparkContext.defaultParallelism * 2
-    lines = lines.repartition(n_part, "media_ref")
 
-    schema = "media_ref string, n_chars int, loss double, loss_per_char double"
-
-    def run(batches: _Iter[_pd.DataFrame]) -> _Iter[_pd.DataFrame]:
+    def setup():
         from calamari_spark.operators.ctc_loss import ctc_loss
         from calamari_spark.sources.pngio import decode_png
 
-        codec, recs = _get_recognizers(1)
-        rec = recs[0]
-        for b in batches:
-            rows = []
-            for ref, png, gt in zip(b["media_ref"], b["png"], b["gt"]):
-                img = decode_png(bytes(png))
-                pooled = rec.pooled_scores(img)
-                sm = (rec.softmax_from_scores(pooled) if pooled is not None
-                      else rec._blank_softmax(img))
-                labels = [codec.char2code[c] for c in gt.replace(" ", "")]
-                loss = ctc_loss(sm, labels)
-                rows.append({
-                    "media_ref": ref,
-                    "n_chars": len(labels),
-                    "loss": round(loss, 6),
-                    "loss_per_char": round(loss / max(len(labels), 1), 6),
-                })
-            yield _pd.DataFrame(rows, columns=["media_ref", "n_chars", "loss", "loss_per_char"])
+        codec, (rec,) = _get_recognizers(1)
 
-    return lines.mapInPandas(run, schema=schema).orderBy("media_ref")
+        def kernel(row):
+            sm = rec.forward_single(decode_png(bytes(row.png)))
+            labels = [codec.char2code[c] for c in row.gt.replace(" ", "")]
+            loss = ctc_loss(sm, labels)
+            return len(labels), round(loss, 6), round(loss / max(len(labels), 1), 6)
+
+        return kernel
+
+    schema = "media_ref string, n_chars int, loss double, loss_per_char double"
+    return line_stage(media.select("media_ref", "png", "gt"), setup, schema).orderBy("media_ref")
 
 
 N_CUTOUT_LINES = 64

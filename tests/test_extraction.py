@@ -241,5 +241,5 @@ def test_provable_unanimity_matches_full_probe(spark, corpus):
         for t, (ch, v) in enumerate(case):
             pooled[t + 1, 2 + ch] = v
         pre = (img, pooled)
-        assert X._recognize_one(b"", 3, with_positions=False, precomputed=pre) == \
+        assert X._recognize_pooled(img, pooled, 3, with_positions=False) == \
             _recognize_one_reference(b"", 3, precomputed=pre)

@@ -176,21 +176,44 @@ def test_bucketed_join_needs_no_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_media_b")
 
 
-def test_extraction_ocr_stage_partition_count(spark):
-    """The compute-bound OCR exchange must carry the explicit parallelism
-    (defaultParallelism * 2), immune to AQE byte-based coalescing."""
+# every plan whose per-line kernel runs in extraction.line_stage -> its module
+LINE_STAGE_PLANS = {
+    "recognize_media": "extraction",
+    "x_extract_docs": "extraction",
+    "x_extract_cer": "extraction",
+    "x_fold_eval": "extraction",
+    "x_media_text": "extraction",
+    "x_media_text_beam": "extraction",
+    "x_media_text_tokenpass": "extraction",
+    "x_media_text_wbs": "extraction",
+    "x_media_text_wordlm": "extraction",
+    "x_media_text_wordlm_bigram": "extraction",
+    "x_recognize_positions": "extraction",
+    "x_ctc_loss": "mediaplans",
+    "x_image_stats": "mediaplans",
+}
+
+
+@pytest.mark.parametrize("name", sorted(LINE_STAGE_PLANS))
+def test_extraction_ocr_stage_partition_count(spark, name):
+    """Every per-line OCR stage is the one line_stage: its exchange is a
+    hash repartition on media_ref carrying the explicit parallelism
+    (defaultParallelism * 2), immune to AQE byte-based coalescing, and it
+    is the plan's only Python node."""
+    import importlib
+    import re
+
     from calamari_spark.plans import extraction as X
 
-    docs, media = X.load_interleaved(spark, SF)
-    spans = X.explode_spans(docs).filter(F.col("kind") == "media").select(
-        "doc_id", "offset", "media_ref"
-    )
-    rec = X.recognize_media(spans.join(media.select("media_ref", "png"), "media_ref"))
+    if name == "recognize_media":
+        df = X.recognize_media(X._media_lines(spark, SF, "doc_id", "offset", "png"))
+    else:
+        module = importlib.import_module(f"calamari_spark.plans.{LINE_STAGE_PLANS[name]}")
+        df = getattr(module, name)(spark, SF)
+    plan = _plan(df)
     expected = spark.sparkContext.defaultParallelism * 2
-    assert f"REPARTITION_BY_NUM, {expected}" in _plan(rec).replace("\n", " ") or \
-           f"hashpartitioning(media_ref#" in _plan(rec)
-    # and the recognize stage itself is the only Python node
-    assert _plan(rec).count("MapInPandas") == 1
+    assert re.search(rf"hashpartitioning\(media_ref#\d+, {expected}\)", plan), plan
+    assert plan.count("MapInPandas") == 1
 
 
 def test_gopher_rules_is_pure_map(spark):
